@@ -81,15 +81,13 @@ object SketchAggregates {
     }
   }
 
-  /** Streaming hooks on the ONE kernel: fold a value into / merge two
-    * register files — used by Streaming.streamingHllRegs so the
-    * incremental per-key state is bit-identical to the batch
-    * aggregate's (the T12 differential).
+  /** Streaming hook on the ONE kernel: fold a value into a register
+    * file — used by Streaming.streamingHllRegs so the incremental
+    * per-key state is bit-identical to the batch aggregate's (the T12
+    * differential).
     */
   def hllUpdate(buf: Array[Byte], value: String, p: Int): Unit =
     HllCore.update(buf, value, p)
-  def hllMerge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] =
-    HllCore.merge(b1, b2)
 
   /** HyperLogLog cardinality estimate of `child` (StringType) with
     * 2^p byte registers. p=8 → ±1.04/√256 ≈ 6.5% standard error on

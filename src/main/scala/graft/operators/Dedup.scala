@@ -425,6 +425,17 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
 
+  /** Asymmetric n-gram CONTAINMENT pairs over pair stats (a_id, b_id,
+    * inter, na, nb): c(A→B) = |A∩B| / |A| — the quote/inclusion
+    * detector (a short doc fully contained in a long one scores 1.0 on
+    * its side while Jaccard stays low, so the near-dup pass misses it).
+    * Same inverted-index shape and cost envelope as ngramJaccardPairs
+    * when fed by ngramPairStats: one shuffle on the 8-byte shingle
+    * hash, pairs inside postings, set sizes carried along, both
+    * directions emitted per unordered pair. Filter keeps pairs where
+    * EITHER direction reaches `minContainment` (unrounded compare —
+    * engines agree on boundaries).
+    */
   private[graft] def containmentFrom(stats: DataFrame,
       minContainment: Double): DataFrame =
     stats
@@ -437,20 +448,6 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, text: Column, id: Column,
       n: Int, minJaccard: Double, maxDf: Int = 0): DataFrame =
     jaccardFrom(ngramPairStats(df, text, id, n, maxDf), minJaccard)
-
-  /** Asymmetric n-gram CONTAINMENT pairs: c(A→B) = |A∩B| / |A| — the
-    * quote/inclusion detector (a short doc fully contained in a long
-    * one scores 1.0 on its side while Jaccard stays low, so the
-    * near-dup pass misses it). Same inverted-index shape and cost
-    * envelope as ngramJaccardPairs: one shuffle on the 8-byte shingle
-    * hash, pairs inside postings, set sizes carried along, both
-    * directions emitted per unordered pair. Filter keeps pairs where
-    * EITHER direction reaches `minContainment` (unrounded compare —
-    * engines agree on boundaries).
-    */
-  def ngramContainmentPairs(df: DataFrame, text: Column, id: Column,
-      n: Int, minContainment: Double): DataFrame =
-    containmentFrom(ngramPairStats(df, text, id, n), minContainment)
 
   /** Connected components over a candidate-pair edge list — the
     * clustering step that turns near-dup PAIRS into dedup GROUPS

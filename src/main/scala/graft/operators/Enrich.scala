@@ -79,7 +79,7 @@ object Enrich {
   /** Full pipeline: raw frame + signal column → enriched nested record
     * (raw fields preserved under `raw_data`, per README.md:503-511).
     * Invalid rows are KEPT with is_valid=false; callers route them
-    * (Streaming.dlqSplit) or drop them — matching the reference's
+    * (Streaming.routeToSinks) or drop them — matching the reference's
     * filter-first stage order without losing the DLQ path.
     */
   def pipeline(df: DataFrame, signalCol: String, tsCol: String,

@@ -18,6 +18,7 @@ import graft.functions.Signal
   *    time, late data dropped past the watermark
   *  - T4 keyed state: retry counting via flatMapGroupsWithState
   *    replaces the Redis processing:{id} hash (README.md:280-289)
+  *    — one implementation per state machine; RocksDB is a conf
   *  - T5 session windows; T7 streaming dedup; T8 DLQ routing
   */
 object Streaming {
@@ -176,16 +177,16 @@ object Streaming {
 
   case class Attempt(id: Long, ok: Boolean, payload: String, atMillis: Long)
   case class RetryState(retries: Int)
-  /** route: "processed" | "dlq" (B6 contract fields for dlq). */
+  /** route: "processed" | "retry" | "dlq" (B6 contract fields for dlq). */
   case class Routed(id: Long, route: String, error_count: Int,
       last_error_millis: Long, payload: String)
 
-  /** The per-key retry fold both T4 implementations run — ONE body so
-    * the legacy (flatMapGroupsWithState) and modern (transformWithState)
-    * state APIs cannot drift. Attempts are folded in EVENT order within
-    * each batch (the iterator arrives in shuffle order, so we sort); a
-    * terminal event closes the current cycle and later attempts start a
-    * fresh one. Cross-batch reordering (an attempt older than an
+  /** The per-key retry fold [[retryRoute]] runs, kept pure (no
+    * GroupState) so the routing rules read apart from the state
+    * plumbing. Attempts are folded in EVENT order within each batch
+    * (the iterator arrives in shuffle order, so we sort); a terminal
+    * event closes the current cycle and later attempts start a fresh
+    * one. Cross-batch reordering (an attempt older than an
     * already-processed terminal event arriving in a later batch) starts
     * a new cycle — full event-time reconciliation would require
     * buffering attempts until a watermark.
@@ -232,45 +233,11 @@ object Streaming {
       }
   }
 
-  /** The SAME retry state machine on Spark 4's transformWithState —
-    * the arbitrary-state API that replaces flatMapGroupsWithState
-    * (per-state-variable storage, TTL support, RocksDB-backed).
-    * Requires `spark.sql.streaming.stateStore.providerClass =
-    * ...RocksDBStateStoreProvider`. Output proved identical to
-    * [[retryRoute]] in StreamingSpec (shared [[foldAttempts]] body +
-    * a same-input differential).
-    */
-  class RetryStateProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Attempt, Routed] {
-    import org.apache.spark.sql.streaming.{TimeMode, TTLConfig, TimerValues, ValueState}
-    @transient private var retries: ValueState[Int] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      retries = getHandle.getValueState[Int]("retries",
-        org.apache.spark.sql.Encoders.scalaInt, TTLConfig.NONE)
-    override def handleInputRows(id: Long, rows: Iterator[Attempt],
-        timerValues: TimerValues): Iterator[Routed] = {
-      val (out, r) = foldAttempts(id, rows.toSeq,
-        if (retries.exists()) retries.get() else 0)
-      if (r > 0) retries.update(r) else retries.clear()
-      out.iterator
-    }
-  }
-
-  def retryRouteTws(ds: Dataset[Attempt])(
-      implicit spark: SparkSession): Dataset[Routed] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    ds.groupByKey(_.id)
-      .transformWithState(new RetryStateProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-
   // ---- T4c: retry with the exponential-backoff SCHEDULE ----------------
 
   /** README.md:99-100 backoff policy: after the k-th failure the key
     * may not be retried for base × 2^(k−1) — 1 s, 2 s, 4 s, 8 s with
-    * the 1 s default base, then the 5th failure dead-letters.
+    * this 1 s base, then the 5th failure dead-letters.
     */
   val BackoffBaseMillis = 1000L
 
@@ -287,21 +254,21 @@ object Streaming {
 
   case class BackoffState(retries: Int, dueMillis: Long, bounces: Int = 0)
 
-  /** The backoff-aware per-key fold (ONE body for both state APIs,
+  /** The backoff-aware per-key fold [[retryRouteBackoff]] runs (pure,
     * like [[foldAttempts]]). On top of the plain retry state machine it
     * keeps a next-attempt-DUE timestamp: a failure schedules
-    * due = at + base × 2^(retries−1); an attempt arriving BEFORE its
-    * due time is not consumed — it is bounced back to the retry topic
-    * as a "retry" row carrying the due time in `last_error_millis`
-    * (the redelivery hint a Kafka retry-topic consumer would delay
-    * on), leaving retries and the schedule untouched — except that
-    * [[MaxBounces]] consecutive premature bounces dead-letter the
-    * record (poison-message livelock bound). Due attempts fold exactly
-    * as before: success → processed + clear; failure → count, and
-    * dead-letter at MaxRetries.
+    * due = at + [[BackoffBaseMillis]] × 2^(retries−1); an attempt
+    * arriving BEFORE its due time is not consumed — it is bounced back
+    * to the retry topic as a "retry" row carrying the due time in
+    * `last_error_millis` (the redelivery hint a Kafka retry-topic
+    * consumer would delay on), leaving retries and the schedule
+    * untouched — except that [[MaxBounces]] consecutive premature
+    * bounces dead-letter the record (poison-message livelock bound).
+    * Due attempts fold exactly as before: success → processed + clear;
+    * failure → count, and dead-letter at MaxRetries.
     */
   private[graft] def foldAttemptsBackoff(id: Long, attempts: Seq[Attempt],
-      st0: BackoffState, baseMillis: Long): (Seq[Routed], BackoffState) = {
+      st0: BackoffState): (Seq[Routed], BackoffState) = {
     var st = st0
     val out = scala.collection.mutable.ArrayBuffer.empty[Routed]
     attempts.sortBy(a => (a.atMillis, a.ok, a.payload)).foreach { a =>
@@ -326,19 +293,18 @@ object Streaming {
           out += Routed(id, "dlq", retries, a.atMillis, a.payload)
           st = BackoffState(0, 0L)
         } else {
-          st = BackoffState(retries, a.atMillis + (baseMillis << (retries - 1)))
+          st = BackoffState(retries, a.atMillis + (BackoffBaseMillis << (retries - 1)))
         }
       }
     }
     (out.toSeq, st)
   }
 
-  /** [[retryRoute]] + the exponential-backoff schedule (legacy
-    * flatMapGroupsWithState form; differential-proved against
-    * [[retryRouteBackoffTws]] in StreamingSpec).
+  /** [[retryRoute]] + the exponential-backoff schedule — the DLQ leg
+    * of [[Pipeline]] (golden-tested in StreamingSpec, restart soak in
+    * RocksDbSoakSpec).
     */
-  def retryRouteBackoff(ds: Dataset[Attempt],
-      baseMillis: Long = BackoffBaseMillis)(
+  def retryRouteBackoff(ds: Dataset[Attempt])(
       implicit spark: SparkSession): Dataset[Routed] = {
     import spark.implicits._
     ds.groupByKey(_.id)
@@ -346,38 +312,10 @@ object Streaming {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (id: Long, attempts: Iterator[Attempt], state: GroupState[BackoffState]) =>
           val (out, st) = foldAttemptsBackoff(id, attempts.toSeq,
-            state.getOption.getOrElse(BackoffState(0, 0L)), baseMillis)
+            state.getOption.getOrElse(BackoffState(0, 0L)))
           if (st.retries > 0) state.update(st) else state.remove()
           out.iterator
       }
-  }
-
-  /** The SAME backoff state machine on transformWithState. */
-  class BackoffStateProcessor(baseMillis: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Attempt, Routed] {
-    import org.apache.spark.sql.streaming.{TimeMode, TTLConfig, TimerValues, ValueState}
-    @transient private var st: ValueState[BackoffState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[BackoffState]("backoff",
-        org.apache.spark.sql.Encoders.product[BackoffState], TTLConfig.NONE)
-    override def handleInputRows(id: Long, rows: Iterator[Attempt],
-        timerValues: TimerValues): Iterator[Routed] = {
-      val (out, s) = foldAttemptsBackoff(id, rows.toSeq,
-        if (st.exists()) st.get() else BackoffState(0, 0L), baseMillis)
-      if (s.retries > 0) st.update(s) else st.clear()
-      out.iterator
-    }
-  }
-
-  def retryRouteBackoffTws(ds: Dataset[Attempt],
-      baseMillis: Long = BackoffBaseMillis)(
-      implicit spark: SparkSession): Dataset[Routed] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    ds.groupByKey(_.id)
-      .transformWithState(new BackoffStateProcessor(baseMillis),
-        TimeMode.None(), OutputMode.Append())
   }
 
   // ---- T4b: timeout-closed sessions (custom state machine) -------------
@@ -538,16 +476,6 @@ object Streaming {
       }
   }
 
-  // ---- stream-stream join ---------------------------------------------
-
-  /** Watermarked stream-stream inner join: left events matched to
-    * right events on `key` within `withinSec` AFTER the left event —
-    * the two-zone correlation the reference's parallel raw/processed
-    * paths imply (README.md:141-149). Both sides carry watermarks so
-    * the join state is bounded and eventually purged. Right columns
-    * are prefixed `r_` in the output automatically (both frames may
-    * use natural names, including the same `key` name).
-    */
   // ---- T14: streaming CUSUM changepoint alerts ------------------------
 
   case class CusumIn(key: String, day: Long, x: Double,
@@ -678,6 +606,16 @@ object Streaming {
   def repetitionCensus(docs: DataFrame): DataFrame =
     graft.Queries66.repCensus(graft.Queries66.repPerDoc(docs))
 
+  // ---- stream-stream join ---------------------------------------------
+
+  /** Watermarked stream-stream inner join: left events matched to
+    * right events on `key` within `withinSec` AFTER the left event —
+    * the two-zone correlation the reference's parallel raw/processed
+    * paths imply (README.md:141-149). Both sides carry watermarks so
+    * the join state is bounded and eventually purged. Right columns
+    * are prefixed `r_` in the output automatically (both frames may
+    * use natural names, including the same `key` name).
+    */
   def streamStreamJoin(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, withinSec: Long,
       watermark: String = "10 minutes"): DataFrame = {

@@ -185,15 +185,15 @@ class PropertySpec extends SparkSpec {
     // order AND carried state must all be identical.
     draws(attemptGen, 25, 606L).foreach { script =>
       val whole = Streaming.foldAttemptsBackoff(1L, script,
-        BackoffState(0, 0L), 1000L)
+        BackoffState(0, 0L))
       (0 to script.length)
         .filter(cut => cut == 0 || cut == script.length ||
           script(cut - 1).atMillis != script(cut).atMillis)
         .foreach { cut =>
           val (b1, b2) = script.splitAt(cut)
           val (out1, st1) = Streaming.foldAttemptsBackoff(1L, b1,
-            BackoffState(0, 0L), 1000L)
-          val (out2, st2) = Streaming.foldAttemptsBackoff(1L, b2, st1, 1000L)
+            BackoffState(0, 0L))
+          val (out2, st2) = Streaming.foldAttemptsBackoff(1L, b2, st1)
           assert((out1 ++ out2, st2) == whole,
             s"cut=$cut diverged for $script")
         }

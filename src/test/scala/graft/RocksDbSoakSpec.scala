@@ -6,19 +6,20 @@ import org.apache.spark.sql.functions._
 import graft.streaming.Streaming
 
 /** RocksDB checkpoint-restart soaks for the full stateful set
-  * (VERDICT r13 #4). The existing T12-T15 differentials prove each
-  * operator == its batch twin within ONE query run on the default
-  * (HDFS-backed) provider; these four prove the SAME state survives a
-  * mid-stream stop + fresh-query restart under
+  * (VERDICT r13 #4). The StreamingSpec goldens and the T12-T16
+  * differentials prove each operator's answer within ONE query run on
+  * the default (HDFS-backed) provider; these prove the SAME state
+  * survives a mid-stream stop + fresh-query restart under
   * RocksDBStateStoreProvider — the provider a 100 TB deployment runs,
-  * where executor state outgrows the JVM heap. T10's soak
-  * (StreamingSpec:331) is the template: stop after the state is
-  * half-built, resume from the checkpoint with a new query object, and
-  * require the final answer bit-identical to an unrestarted reference
-  * run. Update-mode operators (T12 HLL registers, T15 space-saving)
-  * sink via foreachBatch→parquet because the file sink is append-only
-  * and the memory sink does not support recovery; append-mode
-  * operators (T13 as-of serve, T14 CUSUM) use the file sink directly.
+  * where executor state outgrows the JVM heap. Every soak has one
+  * shape: stop after the state is half-built, resume from the
+  * checkpoint with a new query object, and require the final answer
+  * bit-identical to an unrestarted reference run (or the batch twin).
+  * Update-mode operators (T12 HLL registers, T15 space-saving) sink
+  * via foreachBatch→parquet because the file sink is append-only and
+  * the memory sink does not support recovery; append-mode operators
+  * (T10 backoff retry, T13 as-of serve, T14 CUSUM) use the file sink
+  * directly.
   */
 class RocksDbSoakSpec extends SparkSpec {
   import spark.implicits._
@@ -42,6 +43,51 @@ class RocksDbSoakSpec extends SparkSpec {
     */
   private def toParquet[T](out: String): (org.apache.spark.sql.Dataset[T], Long) => Unit =
     (df, _) => df.write.mode("append").parquet(out)
+
+  test("T10 restart soak: RocksDB backoff retry state survives a mid-stream checkpoint restart") {
+    import Streaming.{Attempt, Routed}
+    // the retry/DLQ leg Pipeline runs. Batch 1 leaves id=1 at 4
+    // retries with due=15000 (plus one bounce) and id=2 at 1 retry
+    // with due=1100; batch 2's verdicts (id=1's dead-letter, id=2's
+    // bounce then success) exist only if that state crossed the restart
+    val batch1 = Seq(0L, 1000L, 3000L, 7000L, 8000L).map(t =>
+      Attempt(1, ok = false, s"f$t", t)) :+ Attempt(2, ok = false, "x", 100)
+    val batch2 = Seq(Attempt(1, ok = false, "f15000", 15000),
+      Attempt(2, ok = true, "ok1050", 1050),
+      Attempt(2, ok = true, "ok1100", 1100))
+    // unrestarted reference on the default provider (memory sink)
+    val ref = {
+      val in = MemoryStream[Attempt](spark)
+      val q = Streaming.retryRouteBackoff(in.toDS())
+        .writeStream.format("memory").queryName("t10soakref")
+        .outputMode("append").start()
+      try {
+        in.addData(batch1); q.processAllAvailable()
+        in.addData(batch2); q.processAllAvailable()
+        spark.table("t10soakref").as[Routed].collect().toSet
+      } finally q.stop()
+    }
+    assert(ref.exists(r => r.id == 1 && r.route == "dlq" && r.error_count == 5),
+      s"fixture should dead-letter id=1 in batch 2: $ref")
+    withRocksDB {
+      val dir = Files.createTempDirectory("graft_t10_soak_").toString
+      val in = MemoryStream[Attempt](spark)
+      def start() = Streaming.retryRouteBackoff(in.toDS())
+        .writeStream.format("parquet")
+        .option("path", s"$dir/out")
+        .option("checkpointLocation", s"$dir/cp")
+        .outputMode("append").start()
+      val q1 = start()
+      try { in.addData(batch1); q1.processAllAvailable() } finally q1.stop()
+      // retry counts and due times now live ONLY in the RocksDB checkpoint
+      val q2 = start()
+      try { in.addData(batch2); q2.processAllAvailable() } finally q2.stop()
+      val restarted = spark.read.parquet(s"$dir/out").as[Routed]
+        .collect().toSet
+      assert(restarted == ref,
+        s"restart\\ref=${restarted -- ref}, ref\\restart=${ref -- restarted}")
+    }
+  }
 
   test("T12 restart soak: RocksDB per-key HLL register state survives a mid-stream checkpoint restart") {
     import Streaming.{KeyedValue, KeyRegs}

@@ -290,107 +290,6 @@ class StreamingSpec extends SparkSpec {
       s"stream\\batch=${(streamed -- batch).take(3)}, batch\\stream=${(batch -- streamed).take(3)}")
   }
 
-  test("T4 differential: transformWithState retry == flatMapGroupsWithState") {
-    // the SAME two-batch attempt script through both state APIs; the
-    // modern transformWithState path (RocksDB-backed, Spark 4) must
-    // route identically to the legacy flatMapGroupsWithState path
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def run(name: String,
-          topo: org.apache.spark.sql.Dataset[Attempt] => org.apache.spark.sql.Dataset[Routed]): Set[Routed] = {
-        val in = MemoryStream[Attempt](spark)
-        val q = topo(in.toDS()).writeStream.format("memory")
-          .queryName(name).outputMode("append").start()
-        try {
-          (1 to 4).foreach { i => in.addData(Attempt(1, ok = false, "p1", i)) }
-          in.addData(Attempt(2, ok = false, "p2", 1))
-          q.processAllAvailable()
-          in.addData(Attempt(1, ok = false, "p1", 5))
-          in.addData(Attempt(2, ok = false, "p2", 2))
-          in.addData(Attempt(2, ok = true, "p2", 3))
-          q.processAllAvailable()
-          spark.table(name).as[Routed].collect().toSet
-        } finally q.stop()
-      }
-      val legacy = run("t4legacy", ds => Streaming.retryRoute(ds))
-      val modern = run("t4modern", ds => Streaming.retryRouteTws(ds))
-      assert(legacy.nonEmpty)
-      assert(modern == legacy,
-        s"tws\\legacy=${modern -- legacy}, legacy\\tws=${legacy -- modern}")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
-  test("T10 restart soak: RocksDB transformWithState state survives a mid-stream checkpoint restart bit-identically") {
-    // VERDICT r12 #5: the T4/T10 differential proves the two state
-    // APIs agree within ONE query run; this proves the
-    // transformWithState path's RocksDB state RECOVERS — the query is
-    // stopped mid-script (id=1 holds 4 retries, id=2 holds 1) and a
-    // fresh query object resumes from the checkpoint, so the DLQ
-    // verdicts depend on state that crossed a restart. File sink
-    // (exactly-once via _spark_metadata) because the memory sink does
-    // not support recovery.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val dir = Files.createTempDirectory("graft_t10_restart_").toString
-      val in = MemoryStream[Attempt](spark)
-      def start() = Streaming.retryRouteTws(in.toDS())
-        .writeStream.format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/cp")
-        .outputMode("append").start()
-      val q1 = start()
-      try {
-        (1 to 4).foreach { i => in.addData(Attempt(1, ok = false, "p1", i)) }
-        in.addData(Attempt(2, ok = false, "p2", 1))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      // state now lives ONLY in the RocksDB checkpoint
-      val q2 = start()
-      try {
-        in.addData(Attempt(1, ok = false, "p1", 5))
-        in.addData(Attempt(2, ok = false, "p2", 2))
-        in.addData(Attempt(2, ok = true, "p2", 3))
-        q2.processAllAvailable()
-      } finally q2.stop()
-      val restarted = spark.read.parquet(s"$dir/out").as[Routed]
-        .collect().toSet
-      // single-run legacy reference over the SAME script — the value
-      // the restarted modern path must reproduce exactly
-      val ref = MemoryStream[Attempt](spark)
-      val qr = Streaming.retryRoute(ref.toDS()).writeStream
-        .format("memory").queryName("t10ref").outputMode("append").start()
-      val expected = try {
-        (1 to 4).foreach { i => ref.addData(Attempt(1, ok = false, "p1", i)) }
-        ref.addData(Attempt(2, ok = false, "p2", 1))
-        qr.processAllAvailable()
-        ref.addData(Attempt(1, ok = false, "p1", 5))
-        ref.addData(Attempt(2, ok = false, "p2", 2))
-        ref.addData(Attempt(2, ok = true, "p2", 3))
-        qr.processAllAvailable()
-        spark.table("t10ref").as[Routed].collect().toSet
-      } finally qr.stop()
-      assert(expected.nonEmpty)
-      assert(restarted == expected,
-        s"restart\\ref=${restarted -- expected}, ref\\restart=${expected -- restarted}")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("T4/T8: retry state routes to DLQ after MaxRetries, success clears") {
     val in = MemoryStream[Attempt](spark)
     val q = Streaming.retryRoute(in.toDS())
@@ -405,11 +304,12 @@ class StreamingSpec extends SparkSpec {
       in.addData(Attempt(2, ok = false, "p2", 2))
       in.addData(Attempt(2, ok = true, "p2", 3))
       q.processAllAvailable()
+      // id=1's 5th failure (the one that dead-letters) arrives in batch
+      // 2, so this also pins that the retry count crosses batches
       val routed = spark.table("t4out").as[Routed].collect()
-      val r1 = routed.find(_.id == 1).get
-      assert(r1.route == "dlq" && r1.error_count == 5)
-      val r2 = routed.find(_.id == 2).get
-      assert(r2.route == "processed" && r2.error_count == 2)
+      assert(routed.toSet == Set(
+        Routed(1, "dlq", 5, 5, "p1"),
+        Routed(2, "processed", 2, 3, "p2")), routed.mkString(","))
       assert(routed.length == 2)
     } finally q.stop()
   }
@@ -553,7 +453,7 @@ class StreamingSpec extends SparkSpec {
       Attempt(1, ok = false, "f1000", 1000),
       Attempt(1, ok = true, "ok2000", 2000),
       Attempt(1, ok = true, "ok3000", 3000))
-    val (out, st) = foldAttemptsBackoff(1, script, BackoffState(0, 0L), 1000L)
+    val (out, st) = foldAttemptsBackoff(1, script, BackoffState(0, 0L))
     assert(out.map(r => (r.route, r.payload, r.error_count, r.last_error_millis)) == Seq(
       ("retry", "f500", 1, 1000L),      // before due=1000: bounced, hint=due
       ("retry", "ok2000", 2, 3000L),    // before due=3000 after 2nd failure
@@ -563,7 +463,7 @@ class StreamingSpec extends SparkSpec {
     // fails at 0, +1s, +2s, +4s, +8s — each exactly at its due time
     val fails = Seq(0L, 1000L, 3000L, 7000L, 15000L).zipWithIndex.map {
       case (t, i) => Attempt(2, ok = false, s"f$i", t) }
-    val (out2, st2) = foldAttemptsBackoff(2, fails, BackoffState(0, 0L), 1000L)
+    val (out2, st2) = foldAttemptsBackoff(2, fails, BackoffState(0, 0L))
     assert(out2.map(_.route) == Seq("dlq") && out2.head.error_count == 5)
     assert(st2 == BackoffState(0, 0L))
   }
@@ -578,7 +478,7 @@ class StreamingSpec extends SparkSpec {
     val premature = (1 to MaxBounces).map(i =>
       Attempt(9, ok = false, s"p$i", i.toLong))
     val (out, st) = foldAttemptsBackoff(9, fail +: premature,
-      BackoffState(0, 0L), 1000L)
+      BackoffState(0, 0L))
     assert(out.count(_.route == "retry") == MaxBounces - 1)
     assert(out.count(_.route == "dlq") == 1)
     assert(out.last.route == "dlq")
@@ -591,51 +491,37 @@ class StreamingSpec extends SparkSpec {
       Attempt(9, ok = false, "a", 0),     // due=1000
       Attempt(9, ok = false, "b", 500),   // bounce 1
       Attempt(9, ok = false, "c", 1000)), // on-time: retries=2, due=3000
-      BackoffState(0, 0L), 1000L)
+      BackoffState(0, 0L))
     assert(st2 == BackoffState(2, 3000L, 0))
   }
 
-  test("T4c differential: backoff transformWithState == flatMapGroupsWithState") {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  test("T4c golden: backoff retry state carries the due time across batches") {
+    val in = MemoryStream[Attempt](spark)
+    val q = Streaming.retryRouteBackoff(in.toDS()).writeStream.format("memory")
+      .queryName("t4c_golden").outputMode("append").start()
     try {
-      def run(name: String,
-          topo: org.apache.spark.sql.Dataset[Attempt] => org.apache.spark.sql.Dataset[Routed]): Seq[Routed] = {
-        val in = MemoryStream[Attempt](spark)
-        val q = topo(in.toDS()).writeStream.format("memory")
-          .queryName(name).outputMode("append").start()
-        try {
-          // batch 1: two failures (one premature), a premature success
-          in.addData(Attempt(1, ok = false, "a", 0),
-            Attempt(1, ok = false, "b", 400),
-            Attempt(1, ok = true, "c", 900))
-          q.processAllAvailable()
-          // batch 2: cross-batch schedule honored — the 1000-due from
-          // batch 1 bounces @950, lands @1000; id 2 interleaves
-          in.addData(Attempt(1, ok = true, "d", 950),
-            Attempt(1, ok = true, "e", 1000),
-            Attempt(2, ok = false, "x", 100),
-            Attempt(2, ok = true, "y", 1100))
-          q.processAllAvailable()
-          spark.table(name).as[Routed].collect().toSeq
-            .sortBy(r => (r.id, r.last_error_millis, r.payload))
-        } finally q.stop()
-      }
-      val legacy = run("t4b_legacy", ds => Streaming.retryRouteBackoff(ds))
-      val modern = run("t4b_modern", ds => Streaming.retryRouteBackoffTws(ds))
-      assert(legacy.nonEmpty)
-      assert(modern == legacy, s"tws=$modern legacy=$legacy")
-      // and the due-time ordering actually bit: premature rows bounced
-      assert(legacy.count(_.route == "retry") == 3)
-      assert(legacy.count(_.route == "processed") == 2)
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+      // batch 1: fail@0 schedules due=1000; the failure @400 and the
+      // success @900 arrive before it and bounce
+      in.addData(Attempt(1, ok = false, "a", 0),
+        Attempt(1, ok = false, "b", 400),
+        Attempt(1, ok = true, "c", 900))
+      q.processAllAvailable()
+      // batch 2: the due time from batch 1 still holds — @950 bounces,
+      // @1000 lands; id 2 fails @100 (due=1100) and lands @1100
+      in.addData(Attempt(1, ok = true, "d", 950),
+        Attempt(1, ok = true, "e", 1000),
+        Attempt(2, ok = false, "x", 100),
+        Attempt(2, ok = true, "y", 1100))
+      q.processAllAvailable()
+      val routed = spark.table("t4c_golden").as[Routed].collect().toSeq
+        .sortBy(r => (r.id, r.last_error_millis, r.payload))
+      assert(routed == Seq(
+        Routed(1, "retry", 1, 1000, "b"),
+        Routed(1, "retry", 1, 1000, "c"),
+        Routed(1, "retry", 1, 1000, "d"),
+        Routed(1, "processed", 1, 1000, "e"),
+        Routed(2, "processed", 1, 1100, "y")), routed.mkString(","))
+    } finally q.stop()
   }
 
   test("T1: checkpointed file pipeline is exactly-once across restart") {
